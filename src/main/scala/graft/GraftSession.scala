@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE single session-config point: every entry main (Bench, Verify,
-  * Plans, Profile, InvariantCheck) builds its session here, so the
-  * tuned defaults — AQE on (runtime re-plan, partition coalescing,
-  * skew-join splitting), UTC for oracle parity, nanos-parquet handling
-  * for the events table, graft SQL functions registered — and the
-  * scale-aware shuffle parallelism rule below cannot drift apart
-  * between tools.
+  * Plans, PlanGate, DegenerateGate, InvariantCheck) and the test suite
+  * build their session here, so the tuned defaults — AQE on (runtime
+  * re-plan, partition coalescing, skew-join splitting), UTC for oracle
+  * parity, nanos-parquet handling for the events table, graft SQL
+  * functions registered — and the scale-aware shuffle parallelism rule
+  * below cannot drift apart between tools.
   */
 object GraftSession {
 
@@ -79,11 +79,7 @@ object GraftSession {
             dataDir: Option[String] = None,
             cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val parts = dataDir.map(shufflePartitionsFor(_, cores)).getOrElse(cores)
-    // SPARK_GRAFT_ADVISORY overrides the heap rule (bytes) — the A/B
-    // knob for isolating the advisory's effect on small-SF sweeps
-    // (-D can't override: .config() below beats system properties)
-    val advisory = sys.env.get("SPARK_GRAFT_ADVISORY").map(_.toLong)
-      .getOrElse(advisoryBytesFor(Runtime.getRuntime.maxMemory(), cores))
+    val advisory = advisoryBytesFor(Runtime.getRuntime.maxMemory(), cores)
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -92,12 +88,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
-      // SPARK_GRAFT_PFIRST=false makes AQE coalesce small shuffle
-      // reads to the ADVISORY size instead of stopping early to
-      // preserve parallelism — the A/B knob for the tiny-SF
-      // stage-overhead question; default = Spark's own default
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       // Parquet naive timestamps (isAdjustedToUTC=false) must read as
       // TIMESTAMP, not TIMESTAMP_NTZ: the session TZ is pinned to UTC so

@@ -5,6 +5,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in the oracle SQL would otherwise
+    * make the gate's json.load fail and silently zero the correctness
+    * run. Bench writes its artifact with it too. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The dump loop, separated from `main` so the loud-failure contract
     * is spec-testable (VerifyGateSpec): every selected query either
     * writes `outDir/<name>/` or lands in the returned failure list AND
@@ -24,28 +38,16 @@ object Verify {
         failures ::= (name, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val ordered = failures.reverse
     val failJson = ordered
-      .map { case (k, m) => s"${q(k)}: ${q(m)}" }.mkString("{", ",", "}")
+      .map { case (k, m) => s"${jsonString(k)}: ${jsonString(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
     if (ordered.nonEmpty)
       // denominator = the set actually run, not the registry size —
-      // under SPARK_GRAFT_ONLY the registry count misstates coverage
+      // a caller may pass a filtered map
       System.err.println(s"VERIFY INCOMPLETE: ${ordered.size} of " +
         s"${queries.size} queries failed: ${ordered.map(_._1).mkString(",")}")
     ordered
@@ -58,13 +60,7 @@ object Verify {
     val spark = GraftSession.build(s"local[$cpus]", "graft-verify",
       dataDir = Some(sfDir), cores = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // dev convenience: SPARK_GRAFT_ONLY=a,b,c dumps a subset (the
-    // driver never sets it, so its gate always runs everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    run(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) },
-      SparkEntry.oracleSql)
+    run(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
     spark.stop()
   }
 }

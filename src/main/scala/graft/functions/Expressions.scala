@@ -837,11 +837,12 @@ case class EqualCount(left: Expression, right: Expression)
   * Callers OWN the precondition (arrays sorted ascending, elements
   * distinct, no nulls — `sort_array(array_distinct(...))` upstream);
   * unsorted input would undercount, so the sort lives next to the
-  * array construction, never separated from it. */
+  * array construction, never separated from it. A null array yields
+  * null, like [[EqualCount]]. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with KernelCodegen2 {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
+  override def nullable: Boolean = true
   override def compute2(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]

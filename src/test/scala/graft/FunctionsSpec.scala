@@ -54,6 +54,15 @@ class FunctionsSpec extends AnyFunSuite {
     val r2 = rand.select(size(array_intersect(col("a"), col("b"))).cast("long"))
       .collect().map(_.getLong(0))
     assert(f2.toSeq == r2.toSeq)
+    // a null array yields null, on the generated-code path too (the
+    // exchange keeps the projection out of local-relation folding)
+    val withNulls = Seq((Some(Seq(1L, 2L)), Option.empty[Seq[Long]]),
+        (None, Some(Seq(1L))), (Some(Seq(2L)), Some(Seq(2L))))
+      .toDF("a", "b").repartition(1)
+      .select(native.sorted_intersect_count(col("a"), col("b")).as("c"))
+    assert(withNulls.schema("c").nullable)
+    assert(withNulls.collect().map(r => if (r.isNullAt(0)) -1L else r.getLong(0))
+      .sorted.toSeq == Seq(-1L, -1L, 1L))
   }
 
   test("MinHashSignature equals per-permutation array_min") {

@@ -2,22 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run, built by the same
+  * `GraftSession.build` the mains use (4 cores → 4 shuffle partitions).
+  * Only the warehouse differs: a fresh temp dir per run, passed as a
+  * `spark.*` system property, which the session's conf picks up. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep in lockstep with GraftSession: naive parquet timestamps
-      // read as TIMESTAMP (UTC), never TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    val s = GraftSession.build("local[4]", "graft-test", cores = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -65,5 +65,7 @@ class VerifyGateSpec extends AnyFunSuite {
     // coverage shrinks without any red light
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
+    val blank = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with blank oracle SQL: $blank")
   }
 }
